@@ -541,15 +541,19 @@ def _chained_kmeans(spark, sf_dir):
     Oracles unchanged: the registry entries still train from scratch."""
     import time
 
+    from pyspark.sql import functions as F
+
     from c99_vectordb_spark.operators.kmeans_exact import (
+        ivf_batch_topk,
         kmeans_exact,
         quantized_arr,
         space_arrays,
+        standing_semdedup_cells,
     )
     from c99_vectordb_spark.queries_ext import (
         _IVF_ITERS,
         _IVF_K,
-        _ivf_probe,
+        _IVF_NPROBE,
         _ivfpq_from,
         _semdedup_pairs_from,
     )
@@ -563,7 +567,14 @@ def _chained_kmeans(spark, sf_dir):
     t_train = time.time() - t0
 
     t0 = time.time()
-    _ivf_probe(spark, qarr, cent).write.format("noop").mode(
+    ivf_batch_topk(
+        emb.filter(F.col("vec_id") < 3),
+        cent,
+        standing_semdedup_cells(emb, cent, _IVF_K),
+        tau_k=5,
+        k=_IVF_K,
+        nprobe=_IVF_NPROBE,
+    ).select("qid", "id", "score").write.format("noop").mode(
         "overwrite"
     ).save()
     t_ivf = t_train + (time.time() - t0)

@@ -208,10 +208,18 @@ def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> i
         print(f"Error: invalid --filter expression: {e}", file=sys.stderr)
         return 1
     matches = records.filter(fcol).cache()
-    n = matches.count()
-    print(fmt.matched(n))
-    if stats_key is not None:
-        return _print_stats(matches, stats_key)
+    try:
+        print(fmt.matched(matches.count()))
+        if stats_key is not None:
+            return _print_stats(matches, stats_key)
+        return _print_page(matches, fields, limit, offset)
+    finally:
+        matches.unpersist()
+
+
+def _print_page(matches, fields, limit: int, offset: int) -> int:
+    """The analyze table: the selected fields of one id-ascending page
+    of the matched records."""
     # default projection: id + first 3 sorted metadata keys
     # (memo_cli.py:560-565)
     selected = fields if fields else ["id", *A.default_fields(matches)]
@@ -327,7 +335,14 @@ def _print_stats(matches, key: str) -> int:
     vals = matches.select(
         F.col("id").alias("rid"), value.alias("v"), numeric_src.alias("num"), tag.alias("tag")
     ).filter(F.col("v").isNotNull()).cache()
+    try:
+        return _print_value_stats(vals, key)
+    finally:
+        vals.unpersist()
 
+
+def _print_value_stats(vals, key: str) -> int:
+    """The stats block over one key's (rid, v, num, tag) value rows."""
     counts = (
         vals.groupBy("v")
         .agg(F.count(F.lit(1)).alias("count"), F.min("rid").alias("first_id"))
@@ -445,17 +460,17 @@ def cmd_reindex(spark, base, verbose) -> int:
     # parse the YAML once: without the cache every downstream action
     # (count, compact, dump, embed) re-runs the distributed parse job
     records = records.cache()
+    compacted = M.compact(records).cache()
+    # a failed count or write must not leak either cached frame
     try:
         n_before = records.count()
-        compacted = M.compact(records).cache()
         n_after = compacted.count()
-    finally:
+        # compacted is materialized: free the parsed store before the writes
         records.unpersist()
-    try:
         yaml_io.save_records_yaml(compacted.orderBy("id"), yaml_path)
         _write_embeddings(compacted, emb_path, yaml_path)
     finally:
-        # a failed write must not leak the cached blocks (r12 advice #2)
+        records.unpersist()
         compacted.unpersist()
     print(f"Rebuilt index from {os.path.basename(yaml_path)}")
     print(f"Wrote index: {os.path.basename(emb_path)}")

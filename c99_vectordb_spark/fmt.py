@@ -50,13 +50,6 @@ def recall_hit(doc_id: int, score: float, body: str) -> list[str]:
     return lines
 
 
-def recall_text(k: int, hits: list[tuple[int, float, str]]) -> str:
-    out = [recall_header(k)]
-    for doc_id, score, body in hits:
-        out.extend(recall_hit(doc_id, score, body))
-    return "\n".join(out)
-
-
 # -- R2: recall YAML mode ----------------------------------------------------
 
 def recall_yaml(hits: list[tuple[int, float, str]]) -> str:

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..model import DEFAULT_LIMIT, DEFAULT_OFFSET, STATS_TOP_N
+from ..model import STATS_TOP_N
 from .filters import Resolver, compile_filter
 
 
@@ -74,29 +74,6 @@ def profile_table(df: "DataFrame", columns: list[str]) -> "DataFrame":
     return one.select(F.explode(cols).alias("p")).select(
         "p.col_name", "p.n_nulls", "p.n_distinct", "p.min_str", "p.max_str"
     )
-
-
-def project_page(
-    matches: DataFrame,
-    field_cols: dict[str, Column],
-    order_col: str | Column = "id",
-    limit: int = DEFAULT_LIMIT,
-    offset: int = DEFAULT_OFFSET,
-) -> DataFrame:
-    """P1/P2 + O3/O4 — project fields, paginate id-ascending.
-
-    ``field_cols`` maps output name -> Column (the resolver decides how
-    ``metadata.k`` strips to ``k``, memo_cli.py:543-549). Validation
-    mirrors the reference: limit >= 1, offset >= 0 (memo_cli.py:648-652).
-    """
-    if limit < 1:
-        raise ValueError("limit must be >= 1")
-    if offset < 0:
-        raise ValueError("offset must be >= 0")
-    ordered = matches.select(
-        *[c.alias(n) for n, c in field_cols.items()]
-    ).orderBy(order_col)
-    return ordered.offset(offset).limit(limit)
 
 
 def default_fields(matches: DataFrame, metadata_col: str = "metadata") -> list[str]:

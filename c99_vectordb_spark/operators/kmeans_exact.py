@@ -1,5 +1,8 @@
-"""Deterministic integer k-means (Lloyd) — the oracle-able quantizer
-trainer behind ``sim_pq`` and ``sim_ivf``.
+"""Deterministic integer k-means (Lloyd) — the engine's one quantizer:
+the trainer behind ``sim_pq``, ``sim_ivf``, ``sim_ivfpq`` and SemDeDup,
+and the cell model behind every IVF probe, ``sim_ivf_batch`` included
+(which runs at full probe on the seeded, untrained centroids,
+``iters=0``).
 
 Judge r10 ask #6: those two registry queries were the last rows-only
 entries whose blocker was k-means seeding nondeterminism (MLlib's
@@ -367,19 +370,24 @@ def duckdb_kmeans_cte(
     return ",\n".join(parts), f"{p}_c{iters}", f"{p}_codes"
 
 
+def quantized(vec_col):
+    """The integer quantization of ``quantized_dims`` as a row-local
+    array expression over a float vector column."""
+    return F.transform(
+        vec_col,
+        lambda x: F.floor((x.cast("double") + F.lit(1.0)) * 127.5 + 0.5).cast(
+            "long"
+        ),
+    )
+
+
 def quantized_arr(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """(id, q array<long>): the same integer quantization as
     ``quantized_dims``, kept as an array for zip_with distance math."""
     return emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(
-                (x.cast("double") + F.lit(1.0)) * 127.5 + 0.5
-            ).cast("long"),
-        ).alias("q"),
+        F.col(id_col).alias("id"), quantized(F.col(vec_col)).alias("q")
     )
 
 
@@ -398,32 +406,39 @@ def _dist2(a, b):
     )
 
 
+def _cell_dists(q_col, cent: dict, k: int, dim: int):
+    """(dist, i) for each of the k centroids of a single-space model,
+    riding as literals: exact integer L2 from ``q_col``. The struct
+    order IS the spec's ranking — by dist, ties to the smallest
+    index."""
+    return F.array(
+        *[
+            F.struct(
+                _dist2(
+                    q_col, F.array(*[F.lit(int(v)) for v in cv])
+                ).alias("dist"),
+                F.lit(int(i)).cast("long").alias("i"),
+            )
+            for i, cv in _cent_arrays(cent, k, dim)
+        ]
+    )
+
+
 def assign_cells_expr(q_col, cent: dict, k: int, dim: int):
     """Nearest-centroid cell id as a PURE ROW-LOCAL EXPRESSION — the
     single-space model rides as literals, so assignment is map-only
-    (no crossJoin, no groupBy shuffle; whole-stage codegen). Exact
-    integer L2, ties to the smallest index — bit-identical to the
+    (no crossJoin, no groupBy shuffle). Bit-identical to the
     kmeans_exact assign rule."""
-    entries = [
-        F.struct(
-            _dist2(
-                q_col, F.array(*[F.lit(int(v)) for v in cv])
-            ).alias("dist"),
-            F.lit(int(i)).cast("long").alias("i"),
-        )
-        for i, cv in _cent_arrays(cent, k, dim)
-    ]
-    return F.array_min(F.array(*entries))["i"]
+    return F.array_min(_cell_dists(q_col, cent, k, dim))["i"]
 
 
-def assign_cells(qdf: DataFrame, cent: dict, k: int, dim: int) -> DataFrame:
-    """(id, cell): nearest-centroid assignment under a single-space
-    model (ties -> smallest index, the kmeans_exact rule). r12: the
-    model is now a literal inside one map-only projection — the old
-    k-row broadcast crossJoin + argmin groupBy paid a full shuffle of
-    k rows per vector for what is a row-local computation."""
-    return qdf.select(
-        "id", assign_cells_expr(F.col("q"), cent, k, dim).alias("cell")
+def probe_cells_expr(q_col, cent: dict, k: int, dim: int, nprobe: int):
+    """The ``nprobe`` nearest cell ids, nearest first, as a row-local
+    expression: sort the k (dist, i) entries and slice. At
+    ``nprobe == 1`` this is ``[assign_cells_expr(...)]``."""
+    return F.transform(
+        F.slice(F.array_sort(_cell_dists(q_col, cent, k, dim)), 1, nprobe),
+        lambda s: s["i"],
     )
 
 
@@ -501,38 +516,21 @@ def ivf_batch_topk(
     self excluded, ties by id. Output (qid, id, score, rnk)."""
     from pyspark.sql import Window
 
-    qd = quantized_arr(queries, id_col, vec_col).select(
-        F.col("id").alias("qid"), "q"
-    )
-    # nprobe nearest cells row-locally: sort the k (cdist, i) literal-
-    # centroid entries and slice — array_sort's struct order == the
-    # (cdist, i) row_number order, so the probe set is identical to the
-    # old crossJoin+window form with zero shuffles (r12)
-    entries = F.array(
-        *[
-            F.struct(
-                _dist2(
-                    F.col("q"), F.array(*[F.lit(int(v)) for v in cv])
-                ).alias("cdist"),
-                F.lit(int(i)).cast("long").alias("i"),
-            )
-            for i, cv in _cent_arrays(cent, k, dim)
-        ]
-    )
-    probed = qd.select(
-        "qid",
+    # the probe table is broadcast: a shuffled join on ``cell`` has
+    # only k keys, so it would pile the standing index into k tasks
+    probed = quantized_arr(queries, id_col, vec_col).select(
+        F.col("id").alias("qid"),
+        "q",
         F.explode(
-            F.transform(
-                F.slice(F.array_sort(entries), 1, nprobe), lambda s: s["i"]
-            )
+            probe_cells_expr(F.col("q"), cent, k, dim, nprobe)
         ).alias("cell"),
     )
     st = standing_cells.select(
         F.col("id").alias("sid"), "cell", F.col("q").alias("sq")
     )
     scored = (
-        probed.join(st, "cell")
-        .join(qd, "qid")
+        F.broadcast(probed)
+        .join(st, "cell")
         .filter(F.col("sid") != F.col("qid"))
         .select(
             "qid",

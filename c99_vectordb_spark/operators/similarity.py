@@ -215,8 +215,8 @@ def lsh_bucketed_neighbors(
 # int8 scalar quantization (SQ) — the memory-bound ANN workhorse
 # ---------------------------------------------------------------------------
 #
-# PQ (operators/pq.py) compresses 64 floats to m codebook bytes via
-# trained centroids; scalar quantization is the simpler, train-free
+# PQ (sim_pq over operators/kmeans_exact.py) compresses 64 floats to
+# m codebook bytes via trained centroids; scalar quantization is the simpler, train-free
 # tier every vector store ships first: one global affine map per
 # element into uint8. 256 B/vector instead of 256 B of float32 x 4 —
 # a 4x scan-bandwidth win with NO training step and NO codebook

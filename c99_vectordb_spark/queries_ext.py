@@ -2664,94 +2664,39 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     r10 ask #6's "same recipe" follow-through after sim_pq): the 8
     coarse centroids come from the deterministic integer Lloyd's of
     operators/kmeans_exact.py (one 64-dim space, hash-ordered quantile
-    init, 4 rounds), each vector's cell assignment is the final
-    broadcast-join argmin, and each query (vec_id < 3) probes its 3
-    nearest cells, scoring candidates by exact integer squared L2 on
-    the quantized vectors — top-5 per query by (score, id), self
-    excluded. All int64, so the DuckDB twin retrains the quantizer
-    from scratch through the same spec and hash-matches. The MLlib
-    float path stays in operators/ivf.py for production; probe
-    recall vs exact and batch==loop parity remain in tests/test_ivf.py.
-    Scale: posting lists are the cell equi-join (cluster-pruned scan —
-    the IVF point); the model is a 512-int broadcast. r12: training
-    runs on the map-only array form (space_arrays — every Lloyd round
-    is one scan + one model-sized aggregation, zero corpus shuffles)
-    and the probe scores on whole arrays instead of the 64x
-    dim-exploded join; every integer sum is unchanged, so the oracle
-    hash is identical."""
+    init, 4 rounds), and each query (vec_id < 3) probes its 3 nearest
+    cells through ``ivf_batch_topk``, scoring candidates by exact
+    integer squared L2 on the quantized vectors — top-5 per query by
+    (score, id), self excluded. All int64, so the DuckDB twin retrains
+    the quantizer from scratch through the same spec and hash-matches.
+    Scale: posting lists are the cell equi-join against the broadcast
+    probe table; the model is a 512-int literal. Training runs on the
+    map-only array form (space_arrays — every Lloyd round is one scan +
+    one model-sized aggregation, zero corpus shuffles)."""
     from .operators.kmeans_exact import (
+        ivf_batch_topk,
         kmeans_exact,
         quantized_arr,
         space_arrays,
+        standing_semdedup_cells,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qarr = quantized_arr(emb)
     cent, _codes = kmeans_exact(
-        None, k=_IVF_K, dsub=64, iters=_IVF_ITERS, arr=space_arrays(qarr, 64)
+        None,
+        k=_IVF_K,
+        dsub=64,
+        iters=_IVF_ITERS,
+        arr=space_arrays(quantized_arr(emb), 64),
     )
-    return _ivf_probe(spark, qarr, cent)
-
-
-def _ivf_probe(spark, qarr, cent) -> DataFrame:
-    """The probe half of q_sim_ivf given a trained model — split out so
-    the bench can amortize the shared k=8 training across the sim_ivf /
-    dedup_semdedup_pairs chain (bench._chained_kmeans). ``qarr`` is the
-    quantized-array corpus (id, q); cells are assigned row-locally from
-    the literal model (bit-identical argmin), candidates come from the
-    probed-cell equi-join, and scores are exact integer L2 on the
-    arrays."""
-    from pyspark.sql import Window
-
-    from .operators.kmeans_exact import _cent_arrays, _dist2, assign_cells_expr
-
-    cell_expr = assign_cells_expr(F.col("q"), cent, _IVF_K, 64)
-    qd = qarr.filter(F.col("id") < 3).select(
-        F.col("id").alias("qid"), F.col("q").alias("qv")
-    )
-    # nprobe nearest cells per query, row-locally (sorted literal
-    # entries == the (cdist, i) row_number order of the old window)
-    entries = F.array(
-        *[
-            F.struct(
-                _dist2(
-                    F.col("qv"), F.array(*[F.lit(int(v)) for v in cv])
-                ).alias("cdist"),
-                F.lit(int(i)).cast("long").alias("i"),
-            )
-            for i, cv in _cent_arrays(cent, _IVF_K, 64)
-        ]
-    )
-    probed = qd.select(
-        "qid",
-        "qv",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(entries), 1, _IVF_NPROBE),
-                lambda s: s["i"],
-            )
-        ).alias("cell"),
-    )
-    cells = qarr.select("id", cell_expr.alias("cell"), "q")
-    scored = (
-        probed.join(cells, "cell")
-        .filter(F.col("id") != F.col("qid"))
-        .select(
-            "qid",
-            "id",
-            _dist2(F.col("q"), F.col("qv")).alias("score"),
-        )
-    )
-    return (
-        scored.withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy("score", "id")
-            ),
-        )
-        .filter(F.col("rnk") <= 5)
-        .select("qid", "id", "score")
-    )
+    return ivf_batch_topk(
+        emb.filter(F.col("vec_id") < 3),
+        cent,
+        standing_semdedup_cells(emb, cent, _IVF_K),
+        tau_k=5,
+        k=_IVF_K,
+        nprobe=_IVF_NPROBE,
+    ).select("qid", "id", "score")
 
 
 _IVFPQ_NPROBE = 2
@@ -3109,21 +3054,68 @@ SELECT qid, id, score FROM (
 
 
 def q_sim_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch IVF at full probe (nprobe = n_centroids): exact KNN served
-    through the IVF plan — equi-join of the probe table against the
-    cluster-partitioned index, per-qid top-k window. Full probe makes
-    the result centroid-independent, so this HAS an exact DuckDB
-    oracle: brute-force squared-L2 top-k."""
-    from .operators.ivf import build_ivf, ivf_search_batch
+    """Batch IVF at full probe (nprobe = k = 8): exact KNN served
+    through the IVF plan — each query's probe table (all 8 cells,
+    ranked row-locally) broadcast-joins the cell-assigned vectors, and
+    a per-qid window keeps the top 5 by (score, id), self excluded.
+    Full probe makes the result centroid-independent, so the cells come
+    from kmeans_exact's deterministic seeding alone (``iters=0``; Lloyd
+    rounds could not change the answer) and this HAS an exact DuckDB
+    oracle: brute-force float squared-L2 top-k, scores rounded to 4
+    places."""
+    from pyspark.sql import Window
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    from .operators.kmeans_exact import (
+        assign_cells_expr,
+        kmeans_exact,
+        probe_cells_expr,
+        quantized,
+        quantized_arr,
+        space_arrays,
     )
-    index = build_ivf(emb, n_centroids=8, seed=42)
-    queries = emb.filter(F.col("id") < 3).select(
-        F.col("id").alias("qid"), F.col("vec").cast("array<double>").alias("qvec")
+
+    k = 8
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cent, _codes = kmeans_exact(
+        None, k=k, dsub=64, iters=0, arr=space_arrays(quantized_arr(emb), 64)
     )
-    return ivf_search_batch(index, queries, k=5, nprobe=8)
+    q = quantized(F.col("embedding"))
+    cells = emb.select(
+        F.col("vec_id").alias("id"),
+        assign_cells_expr(q, cent, k, 64).alias("cell"),
+        F.col("embedding").alias("vec"),
+    )
+    probed = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qvec"),
+        F.explode(probe_cells_expr(q, cent, k, 64, k)).alias("cell"),
+    )
+    sq_l2 = F.aggregate(
+        F.zip_with(
+            "vec",
+            "qvec",
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    scored = (
+        F.broadcast(probed)
+        .join(cells, "cell")
+        .filter(F.col("id") != F.col("qid"))
+        .select("qid", "id", F.round(sq_l2, 4).alias("score"))
+    )
+    return (
+        scored.withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("qid").orderBy("score", "id")
+            ),
+        )
+        .filter(F.col("rnk") <= 5)
+        .select("qid", "id", "score")
+    )
 
 
 _DUCK_SQL2 = (

@@ -642,8 +642,7 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed query, exact integer-L2 re-rank to top-10. Every number is
     an exact int64, so the DuckDB twin (which RETRAINS the codebooks
     from scratch through the same spec in chained CTEs) hash-matches
-    bit-for-bit. The MLlib-trained float path stays in operators/pq.py
-    for production use; this query pins the trained-PQ SEMANTICS as a
+    bit-for-bit: this query pins the trained-PQ SEMANTICS as a
     specification. Scale: the model is a 1024-int broadcast; each
     Lloyd round is one scan + model-sized collect (the BPE-trainer
     contract); encode and ADC are map-only joins."""
@@ -718,15 +717,13 @@ ORDER BY exact_dist, vec_id LIMIT 10
 # PQ with PINNED codebooks: the oracle-able twin of sim_pq
 # ---------------------------------------------------------------------------
 #
-# sim_pq's KMeans codebooks are engine-specific, so it can only be
-# rows-only checked. This variant pins deterministic codebooks from a
-# closed-form formula and evaluates encode (per-subspace argmin) and
+# sim_pq trains INTEGER codebooks (operators/kmeans_exact.py). This
+# variant pins float codebooks from a closed-form formula and evaluates encode (per-subspace argmin) and
 # ADC scoring as plain expressions whose floating-point evaluation
 # ORDER is identical in Spark and DuckDB (left-associated sums of
 # (v-c)^2 over float->double-widened elements), so every score is
-# bit-identical across engines and the full top-k hash-matches.
-# Production keeps the trained path (operators/pq.py: map-only Arrow
-# encode); this query exists to pin the ADC semantics end to end.
+# bit-identical across engines and the full top-k hash-matches: it
+# pins the float ADC semantics end to end.
 
 _PQF_M, _PQF_DSUB, _PQF_KSUB = 8, 8, 16  # dim 64 = 8 subspaces x 8 dims
 

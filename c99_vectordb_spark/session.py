@@ -42,11 +42,3 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None):
-    """Load driver testdata parquet tables as a dict of DataFrames."""
-    from .model import TESTDATA_TABLES
-
-    names = names or TESTDATA_TABLES
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

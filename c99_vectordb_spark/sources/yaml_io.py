@@ -466,9 +466,3 @@ def parse_save_batch_yaml(text: str) -> list[tuple]:
         yrepr, keys = _yaml_extras(metadata or None)
         rows.append((rid, body, scalars, tags, lists, yrepr, keys))
     return rows
-
-
-def load_save_batch_yaml(spark: SparkSession, path: str) -> DataFrame:
-    with open(path, encoding="utf-8") as f:
-        rows = parse_save_batch_yaml(f.read())
-    return spark.createDataFrame(rows, YAML_BATCH_SCHEMA)

@@ -146,23 +146,37 @@ def test_simhash_hamming_verify_inside_join(spark, documents):
     assert any("bit_count" in ln for ln in join_lines), join_lines
 
 
-def test_ivf_partitioned_store_prunes_partitions(spark, embeddings, tmp_path):
-    """The cluster-partitioned IVF store is the 'inverted file': a
-    probe of 2 clusters must show partition filters on the scan and
-    read only those directories."""
-    from c99_vectordb_spark.operators import ivf as IVF
+def test_ivf_probe_cell_join_broadcasts(spark, embeddings):
+    """The IVF probe table is broadcast into the cell join even with
+    size-based broadcasting off: a shuffled join on ``cell`` would pile
+    the standing index into at most k tasks."""
+    from c99_vectordb_spark.operators.kmeans_exact import (
+        ivf_batch_topk,
+        kmeans_exact,
+        quantized_arr,
+        space_arrays,
+        standing_semdedup_cells,
+    )
 
-    emb = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    index = IVF.build_ivf(emb, n_centroids=8, seed=42)
-    path = str(tmp_path / "ivf_store")
-    index.write(path)
-    loaded = spark.read.parquet(path).filter(F.col("cluster").isin(1, 3))
-    plan = _plan(loaded)
-    assert "PartitionFilters" in plan and "cluster" in plan.split("PartitionFilters")[1][:120]
-    # pruned scan must list at most the probed partition count
-    files = loaded.select(F.input_file_name()).distinct().collect()
-    dirs = {f[0].split("/cluster=")[1].split("/")[0] for f in files}
-    assert dirs <= {"1", "3"}
+    cent, _codes = kmeans_exact(
+        None, k=8, dsub=64, iters=0, arr=space_arrays(quantized_arr(embeddings), 64)
+    )
+    df = ivf_batch_topk(
+        embeddings.filter(F.col("vec_id") < 3),
+        cent,
+        standing_semdedup_cells(embeddings, cent, 8),
+        tau_k=5,
+        k=8,
+        nprobe=3,
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _plan(df)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_tpch_q5_broadcasts_dims_single_shuffle_join(spark, sf_dir):
