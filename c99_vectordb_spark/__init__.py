@@ -11,7 +11,8 @@ Arrow-batched pandas UDFs, and exact output formatting.
 Layout (SURVEY.md §7 build plan):
 
 - ``model``      — schemas + constants (DIM, MAX_K, ...)
-- ``session``    — SparkSession factory with scale-oriented defaults
+- ``session``    — SparkSession factory with scale-oriented defaults,
+                   and ``spread``, the one rule for adding parallelism
 - ``hashing``    — the stable cross-engine hash spec (driver-side ref impl)
 - ``functions``  — reusable Column-level building blocks (embed, text)
 - ``operators``  — filters (F1-F10), recall (V1-V5), analyze (P/A/O),

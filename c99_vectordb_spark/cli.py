@@ -390,8 +390,9 @@ def cmd_save(spark, base, save_path, verbose) -> int:
     records, rc = _load_records_or_error(spark, yaml_path)
     if rc:
         return rc
-    # parse the YAML once across the verb's four actions (validate,
-    # max-id, dump, embed) instead of once per action
+    # cache across the verb's four actions (validate, max-id, dump,
+    # embed): the distributed parse is already checkpointed, but each
+    # action would re-read the driver-parsed rows from their pickles
     records = records.cache()
     # the try starts BEFORE the first action on the cached frame, so a
     # failure in validate_overwrites / the max-id collect cannot leak
@@ -419,13 +420,13 @@ def cmd_save(spark, base, save_path, verbose) -> int:
                 return 1
             else:
                 print(fmt.memorized(body, rid))
-        merged = M.upsert(records, batch).cache()
+        merged = M.upsert(records, batch, max_id=max_id).cache()
         try:
             _log(
                 verbose,
                 f"save: {len(rows)} entries applied onto max_id={max_id}",
             )
-            yaml_io.save_records_yaml(merged.orderBy("id"), yaml_path)
+            yaml_io.save_records_yaml(merged, yaml_path)
             _write_embeddings(merged, emb_path, yaml_path)
         finally:
             merged.unpersist()
@@ -457,8 +458,8 @@ def cmd_reindex(spark, base, verbose) -> int:
     records, rc = _load_records_or_error(spark, yaml_path)
     if rc:
         return rc
-    # parse the YAML once: without the cache every downstream action
-    # (count, compact, dump, embed) re-runs the distributed parse job
+    # cache across count, compact, dump and embed: each action would
+    # otherwise re-read the driver-parsed rows from their pickles
     records = records.cache()
     compacted = M.compact(records).cache()
     # a failed count or write must not leak either cached frame
@@ -467,7 +468,7 @@ def cmd_reindex(spark, base, verbose) -> int:
         n_after = compacted.count()
         # compacted is materialized: free the parsed store before the writes
         records.unpersist()
-        yaml_io.save_records_yaml(compacted.orderBy("id"), yaml_path)
+        yaml_io.save_records_yaml(compacted, yaml_path)
         _write_embeddings(compacted, emb_path, yaml_path)
     finally:
         records.unpersist()

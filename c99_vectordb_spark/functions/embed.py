@@ -1,22 +1,17 @@
-"""V1/V5 — signed hashing-trick bag-of-words embedding, two ways.
+"""V1/V5 — signed hashing-trick bag-of-words embedding.
 
 Reference pipeline (/root/reference/memo_cli.py:158-167): lowercase →
 ``[a-z0-9_]+`` tokens → signed hash into DIM buckets → L2 normalize.
 The salted builtin ``hash()`` is replaced by the stable spec in
 ``hashing.py`` (SURVEY.md §1.3 — intentional behavioral fix).
 
-Two implementations with identical integer results:
-
-1. ``embed_expr`` — pure Spark SQL expression (higher-order functions).
-   Fully JVM-side, Catalyst-optimizable, and exactly mirrorable in
-   DuckDB SQL → this is what the correctness oracle checks.
-2. ``embed_pandas_udf`` — Arrow-batched pandas UDF with a per-batch
-   token-hash cache. Map-only (no shuffle), used by default for bulk
-   embedding builds: at 100 TB this is one narrow stage over the
-   documents table, no wide exchange anywhere.
-
-Both produce exact integer count vectors (ARRAY<BIGINT>); the
-L2-normalized float view is a derived expression (``normalized``).
+``embed_pandas_udf`` is an Arrow-batched pandas UDF with a per-batch
+token-hash cache, producing exact integer count vectors
+(ARRAY<BIGINT>) equal to the driver-side reference
+``hashing.embed_text_int``. Map-only (no shuffle): at 100 TB a bulk
+embedding build is one narrow stage over the documents table, no wide
+exchange anywhere. The L2-normalized float view is a derived
+expression (``normalized``).
 """
 
 from __future__ import annotations
@@ -28,36 +23,12 @@ from ..model import DIM
 from . import text as Ft
 
 
-def embed_expr(body: Column, dim: int = DIM) -> Column:
-    """Pure-expression signed-BoW integer embedding of a string column.
-
-    tokens → per-token (bucket, sign) → fold into a dense ARRAY<BIGINT>
-    of length ``dim``. The fold updates one slot per token via
-    ``transform`` over the accumulator array; for the short-to-medium
-    documents this engine targets the O(tokens·dim) expression cost is
-    dwarfed by I/O, and the whole thing stays inside codegen.
-    """
-    toks = Ft.tokens(body)
-    hashes = F.transform(toks, Ft.token_hash)
-    zero = F.array_repeat(F.lit(0).cast("long"), dim)
-    return F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.transform(
-            acc,
-            lambda v, i: F.when(
-                i == (h % F.lit(dim)).cast("int"),
-                v + F.when(h % 2 == 1, F.lit(1)).otherwise(F.lit(-1)),
-            ).otherwise(v),
-        ),
-    )
-
-
 def embed_pandas_udf(dim: int = DIM):
-    """Arrow-batched pandas UDF computing the same integer embedding.
+    """Arrow-batched pandas UDF computing the signed-BoW integer embedding.
 
     Vectorized per batch with a token→(bucket, signed) cache; exact
-    integer parity with ``embed_expr`` (tested in tests/test_embed.py).
+    integer parity with ``hashing.embed_text_int`` (tested in
+    tests/test_embed.py).
     """
     import numpy as np
 
@@ -106,7 +77,6 @@ def build_embeddings(
     id_col: str = "id",
     body_col: str = "body",
     dim: int = DIM,
-    use_udf: bool = True,
 ) -> DataFrame:
     """V5 — batch embedding/index build (memo_cli.py:272-285).
 
@@ -115,7 +85,7 @@ def build_embeddings(
     are co-partitioned with their source split, so a downstream
     write preserves partitioning with no exchange.
     """
-    emb = embed_pandas_udf(dim)(F.col(body_col)) if use_udf else embed_expr(F.col(body_col), dim)
+    emb = embed_pandas_udf(dim)(F.col(body_col))
     return (
         records.filter(~Ft.is_blank(F.col(body_col)))
         .select(F.col(id_col).alias("id"), emb.alias("vec"))

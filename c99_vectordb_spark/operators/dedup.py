@@ -32,6 +32,7 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .. import session
 from ..functions import text as Ft
 from ..model import HASH_MOD
 
@@ -586,15 +587,8 @@ def minhash_lsh_pairs(
     from hash-partitioned joins on (band_idx, band_sig), never from an
     all-pairs comparison.
     """
-    # hash-spread the doc scan first: the signature UDF is map-only, so
-    # over a single-file parquet table BOTH sides of the band self-join
-    # otherwise compute their signatures in one task (explicit count —
-    # AQE's byte-sized coalescing cannot see the per-doc UDF cost;
-    # measured at sf0.1: dedup_minhash_pairs 3.1 -> 2.0 s,
-    # corpus_pipeline 6.5 -> 4.2 s warm)
-    df = df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    # the signature UDF: dedup_minhash_pairs 3.1 -> 2.0 s warm at sf0.1
+    df = session.spread(df, id_col)
     bands = minhash_bands(df, id_col, body_col, n)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -1147,14 +1141,13 @@ def cosine_top_pairs(
             F.aggregate(c, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double"))
         )
 
-    # repartition the STREAMED side: the broadcast-NL join inherits the
-    # scan's partitioning, and a single-file parquet table otherwise
-    # runs the whole O(n^2) scan in 1-2 tasks (sf1 soak: the stage sat
-    # on one straggler task for an hour; hash-spreading it uses every
-    # core — the baseline stays quadratic by contract, but honestly so)
-    a = emb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), norm(F.col(vec_col)).alias("na")
-    ).repartition(emb.sparkSession.sparkContext.defaultParallelism, F.col("id_a"))
+    # the streamed side of the O(n^2) pair scan: one task for an hour at sf1
+    a = session.spread(
+        emb.select(
+            F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), norm(F.col(vec_col)).alias("na")
+        ),
+        "id_a",
+    )
     b = emb.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), norm(F.col(vec_col)).alias("nb")
     )
@@ -1215,12 +1208,15 @@ def cosine_top_pairs_staged(
     from .similarity import _dot, _norm, vec_exact_collapse
 
     uniq, mem = vec_exact_collapse(emb, id_col=id_col, vec_col=vec_col)
-    a = uniq.select(
-        F.col("id").alias("ra"),
-        F.col("vec").alias("va"),
-        _norm(F.col("vec")).alias("na"),
-        F.col("kdup").alias("ka"),
-    ).repartition(uniq.sparkSession.sparkContext.defaultParallelism, F.col("ra"))
+    a = session.spread(
+        uniq.select(
+            F.col("id").alias("ra"),
+            F.col("vec").alias("va"),
+            _norm(F.col("vec")).alias("na"),
+            F.col("kdup").alias("ka"),
+        ),
+        "ra",
+    )
     b = uniq.select(
         F.col("id").alias("rb"),
         F.col("vec").alias("vb"),

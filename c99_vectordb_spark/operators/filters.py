@@ -118,7 +118,7 @@ def _py_str(col: Column, dtype: T.DataType) -> Column:
     return col.cast("string")
 
 
-def columns_resolver(df: DataFrame, null_is_absent: bool = True) -> Resolver:
+def columns_resolver(df: DataFrame) -> Resolver:
     """Resolve keys against plain typed top-level columns.
 
     A NULL cell is treated as an absent key (the SQL-natural reading;
@@ -137,7 +137,7 @@ def columns_resolver(df: DataFrame, null_is_absent: bool = True) -> Resolver:
             )
         dtype = schema[key]
         col = F.col(key)
-        exists = col.isNotNull() if null_is_absent else F.lit(True)
+        exists = col.isNotNull()
         if isinstance(dtype, T.ArrayType):
             elems = F.transform(col, lambda e: _py_str(e, dtype.elementType))
             return FieldRef(

@@ -54,6 +54,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import session
+
 P1, B1 = 1_000_000_007, 31
 P2, B2 = 998_244_353, 37
 
@@ -219,17 +221,14 @@ def kmeans_exact(
         # TRAINING copy for callers whose arr carries an EXPENSIVE
         # upstream lineage (the IVF-PQ residual derivation re-runs the
         # coarse assign + residual zip_with per Lloyd round otherwise):
-        # hash-spread + checkpoint once, train from the cached wide
+        # spread + checkpoint once, train from the cached wide
         # blocks. The returned codes use the CALLER's arr (fresh
         # lineage), so the checkpoint frees on return. Measured: the
         # residual training gains ~0.8 s at sf0.1 while the cheap
         # coarse training LOSES ~0.4 s to the extra checkpoint job —
         # hence opt-in, not default. At cluster scale this frame is
         # the training sample (docstring above), not the corpus.
-        spark_ctx = arr.sparkSession.sparkContext
-        reshaped = arr.repartition(
-            spark_ctx.defaultParallelism, F.col("id"), F.col("j")
-        ).localCheckpoint(eager=True)
+        reshaped = session.spread(arr, "id", "j").localCheckpoint(eager=True)
         arr = reshaped
     spark = arr.sparkSession
     h1 = _hash_over(F.col("vals"), B1, P1, dsub).alias("h1")

@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .. import session
+
 #: multimodal record: payload + mime + per-modality metadata
 MEDIA_SCHEMA = T.StructType(
     [
@@ -861,21 +863,6 @@ def media_content_sum(media: DataFrame) -> DataFrame:
     return media.mapInPandas(gen, schema=CONTENT_SUM_SCHEMA)
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition to the cluster's parallelism before a HEAVY codec
-    stage (PNG deflate, JPEG DCT+Huffman).
-
-    Those stages are CPU-bound Python (ms per row); the shuffle moves
-    only document rows (KBs), which is noise next to the per-row codec
-    cost, and it also levels out payload-size skew. At toy scale this
-    matters even more: a single small parquet file arrives as ONE
-    split, which would serialize the whole Arrow stage (measured:
-    jpeg_pixel 10s -> ~2s at sf0.1). Cheap generators (BMP/WAV struct
-    packing) deliberately skip it — there the shuffle costs more than
-    the serial encode."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Synthesize a media table from the documents corpus (UTF-8 bytes
     as 'application/raw' payloads) — deterministic test/demo input
@@ -912,7 +899,7 @@ def media_from_documents_mixed(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    # no fan-out: BMP/WAV packing is struct-copy cheap — a repartition
+    # no spread: BMP/WAV packing is struct-copy cheap — a repartition
     # would cost more than the serial encode (measured at sf0.1)
     return docs.select("doc_id", "text", "lang").mapInPandas(
         gen, schema=MEDIA_SCHEMA
@@ -946,9 +933,9 @@ def media_from_documents_png(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
-    )
+    # the per-row PNG deflate encode
+    docs = session.spread(docs.select("doc_id", "text", "lang"), "doc_id")
+    return docs.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def media_from_documents_gif(docs: DataFrame) -> DataFrame:
@@ -974,9 +961,9 @@ def media_from_documents_gif(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
-    )
+    # the per-row GIF LZW encode
+    docs = session.spread(docs.select("doc_id", "text", "lang"), "doc_id")
+    return docs.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def media_from_documents_jpeg(docs: DataFrame) -> DataFrame:
@@ -1004,9 +991,9 @@ def media_from_documents_jpeg(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
-    )
+    # the per-row JPEG container encode
+    docs = session.spread(docs.select("doc_id", "text", "lang"), "doc_id")
+    return docs.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 def media_from_documents_jpeg_real(docs: DataFrame) -> DataFrame:
@@ -1043,9 +1030,9 @@ def media_from_documents_jpeg_real(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
-    )
+    # the per-row DCT+Huffman encode: multimodal_jpeg_pixel 10 -> ~2 s at sf0.1
+    docs = session.spread(docs.select("doc_id", "text", "lang"), "doc_id")
+    return docs.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
 IMAGE_STATS_SCHEMA = T.StructType(
@@ -1203,7 +1190,7 @@ def media_from_documents_wav_pcm(docs: DataFrame) -> DataFrame:
     n = max(8, strlen(text)//2) samples with
     sample[k] = ((31*doc_id + 17*k) mod 65536) - 32768. Closed-form in
     (doc_id, k), so sample-level statistics computed after a REAL
-    RIFF/fmt/data decode have exact SQL twins. No fan-out — sample
+    RIFF/fmt/data decode have exact SQL twins. No spread — sample
     synthesis + WAV packing is struct-copy cheap."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

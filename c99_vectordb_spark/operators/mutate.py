@@ -6,10 +6,11 @@ Reference write path (/root/reference/memo_cli.py:403-449 command_save,
 - M1 append: new id = next dense id
 - M2 overwrite by id: replaces body+metadata in place; overwriting a
   blank/unindexed record is an error
-- M3 any overwrite forces a full index rebuild (HNSW limitation) — our
-  improvement: only changed rows are re-embedded (embeddings derive
-  from the record table transactionally, so the reference's
-  save-only-index desync quirk M6 cannot occur here)
+- M3 any overwrite forces a full index rebuild (HNSW limitation). The
+  CLI save does the same: it re-embeds the whole store. Only the
+  streaming ``apply_yaml_save_rows`` re-embeds just the changed rows.
+  Embeddings derive from the record table transactionally, so the
+  reference's save-only-index desync quirk M6 cannot occur here
 - M4 soft delete: tombstone = truthy ``metadata.deleted`` OR the body
   itself parses as a YAML map with truthy ``deleted``
 - M5 compaction (reindex): drop blank/deleted, re-assign dense ids

@@ -9,7 +9,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import hashing
+from . import hashing, session
 from .model import HASH_MOD
 from .operators.dedup import (
     MINHASH_A,
@@ -1185,13 +1185,9 @@ def q_sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         " CAST(0 AS DOUBLE), (acc, d) -> acc + d)"
     )
     cd = "array(" + ", ".join(_sqs.format(a="_e", b=_dl(c)) for c in coarse) + ")"
-    # spread the single-split scan first: the per-row 8x64-dim coarse
-    # distances below are compute-dense (similarity._spread rationale)
+    # the per-row 8x64-dim coarse distances below
     easn = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("vec_id")
-        )
+        session.spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id")
         .selectExpr(
             "vec_id AS id",
             "embedding",
@@ -2940,19 +2936,15 @@ def _semdedup_pairs_from(emb: DataFrame, cent: dict) -> DataFrame:
     # join — 25 GB through the 8 cell-join tasks at sf1 (~250 s); the
     # staged shape is the same candidates->verify discipline as the
     # rest of the dedup family.
-    # the probe side is map-only off a small parquet scan, so without
-    # an explicit spread the whole n^2/k pair enumeration (and the
-    # dist2 re-rank below) would run in the scan's task count (1 at
-    # bench scale). Hash-spread the ~100 B/row candidate side across
-    # the cluster BEFORE the join — cells are broadcast, so pairs of
-    # ONE hot cell also spread over every task (the SemDeDup hot-cell
-    # failure mode): compute parallelism is bounded by rows, not cells.
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    a = cells.select(
-        "cell",
-        F.col("id").alias("id_a"),
-        *[F.col(f"s{j}").alias(f"sa{j}") for j in range(8)],
-    ).repartition(par, F.col("id_a"))
+    # the n^2/k pair enumeration; rows spread, so one hot cell uses every task
+    a = session.spread(
+        cells.select(
+            "cell",
+            F.col("id").alias("id_a"),
+            *[F.col(f"s{j}").alias(f"sa{j}") for j in range(8)],
+        ),
+        "id_a",
+    )
     b = cells.select(
         "cell",
         F.col("id").alias("id_b"),
@@ -5603,18 +5595,8 @@ def q_orders_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v"),
     )
-    # the orders file scans as a handful of partitions; spread the
-    # x64 explode+hash work across the cluster BEFORE fanning out
-    # (shuffles n rows, computes 64n hashes in parallel after). The
-    # partition count is EXPLICIT: a keyed repartition() without one is
-    # fair game for AQE coalescing, and at bench scale the pre-explode
-    # frame is a few MB — AQE folded it to ONE task and the 64n
-    # md5+conv evaluations ran single-threaded (measured 11s -> the
-    # whole query is compute-bound after the fan-out, which byte-sized
-    # coalescing cannot see). defaultParallelism scales with the
-    # cluster instead of pinning a local constant.
-    n_parts = spark.sparkContext.defaultParallelism
-    rep = base.repartition(n_parts, F.col("k")).select(
+    # the x64 explode + md5: orders_bootstrap_ci 12.5 -> 1.8 s warm at sf0.1
+    rep = session.spread(base, "k").select(
         "k", "v", F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("b")
     )
     # u lands in its OWN projection and the CASE ladder references the

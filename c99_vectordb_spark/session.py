@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -42,3 +42,29 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-spread ``df`` over the cluster's ``defaultParallelism`` tasks,
+    keyed on ``keys`` (at least one; the row id).
+
+    The rule, stated once for every caller:
+
+    - **When to spread:** right before a compute-dense map-side stage
+      (per-row UDFs, hashing, vector folds, codecs) whose input is a
+      single split -- every small single-file parquet table scans as
+      one task -- or a byte-small exchange that AQE would coalesce.
+      The shuffle moves only the input rows; the stage after it gains
+      the whole cluster.
+    - **How:** an explicit partition count, which plans as
+      ``REPARTITION_BY_NUM`` and which AQE's byte-sized coalescing
+      never folds (it cannot see per-row compute), keyed on the row id,
+      so there is no round-robin sort-before-repartition.
+    - **When not to spread:** inside iterative, overhead-bound loops
+      (graph/kcore/SSSP measured 2-4x worse, OPTIMIZATION_r12 lesson
+      2), and on input that already has at least ``defaultParallelism``
+      partitions.
+    """
+    if not keys:
+        raise ValueError("spread: give at least one key column")
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)

@@ -272,7 +272,7 @@ def _parse_records_distributed(spark: SparkSession, text: str) -> DataFrame:
                 T.StructField("doc", T.StringType()),
             ]
         ),
-    ).repartition(max(2, spark.sparkContext.defaultParallelism))
+    )
 
     out_schema = T.StructType(
         [

@@ -1,4 +1,4 @@
-"""Embedding parity: python spec == Spark expression == pandas UDF == DuckDB."""
+"""Embedding parity: python spec == pandas UDF, token hash == DuckDB."""
 
 from __future__ import annotations
 
@@ -7,9 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from c99_vectordb_spark import hashing
-from c99_vectordb_spark.functions import embed, text as Ft
+from c99_vectordb_spark.functions import embed
 
-DIM = 64  # small dim keeps the expression fold cheap in tests
+DIM = 64
 
 
 def test_python_spec_basics():
@@ -37,26 +37,15 @@ def sample(spark, documents):
     return documents.limit(30).select("doc_id", "text")
 
 
-def test_expr_matches_python(spark, sample):
+def test_udf_matches_python(spark, sample):
     rows = (
-        sample.withColumn("vec", embed.embed_expr(F.col("text"), DIM))
+        sample.withColumn("vec", embed.embed_pandas_udf(DIM)(F.col("text")))
         .select("doc_id", "text", "vec")
         .collect()
     )
     assert rows
     for r in rows:
-        assert r.vec == hashing.embed_text_int(r.text, dim=DIM)
-
-
-def test_udf_matches_expr(spark, sample):
-    rows = (
-        sample.withColumn("e", embed.embed_expr(F.col("text"), DIM))
-        .withColumn("u", embed.embed_pandas_udf(DIM)(F.col("text")))
-        .select("e", "u")
-        .collect()
-    )
-    for r in rows:
-        assert list(r.e) == list(r.u)
+        assert list(r.vec) == hashing.embed_text_int(r.text, dim=DIM)
 
 
 def test_normalized_unit_norm(spark, sample):

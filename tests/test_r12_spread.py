@@ -2,12 +2,11 @@
 
 Two invariants the r12 plan changes must hold forever:
 
-1. **Result identity** — `_spread` (operators/similarity) and the
-   explicit-count repartitions added to `minhash_lsh_pairs` and
-   `orders_bootstrap_ci` are pure physical-plan moves: hash-spreading
-   the corpus side must not change a single output row of the scoring
-   operators (scores are the same expressions over the same doubles;
-   windows carry total orders).
+1. **Result identity** — `session.spread`, which every explicit-count
+   repartition in the engine goes through, is a pure physical-plan
+   move: hash-spreading the corpus side must not change a single
+   output row of the scoring operators (scores are the same
+   expressions over the same doubles; windows carry total orders).
 2. **Plan shape** — the spread is an EXPLICIT-count repartition
    (`REPARTITION_BY_NUM`), because a keyed `repartition(col)` without a
    count is fair game for AQE's byte-sized coalescing, which is blind
@@ -18,6 +17,7 @@ Two invariants the r12 plan changes must hold forever:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def _rows(df, cols):
@@ -26,6 +26,7 @@ def _rows(df, cols):
 
 def test_spread_preserves_topk_neighbors(spark, embeddings, monkeypatch):
     import c99_vectordb_spark.operators.similarity as S
+    from c99_vectordb_spark import session
 
     emb = embeddings.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
@@ -36,7 +37,7 @@ def test_spread_preserves_topk_neighbors(spark, embeddings, monkeypatch):
     spread = _rows(
         S.topk_neighbors(emb, queries, k=5), ["qid", "id", "score"]
     )
-    monkeypatch.setattr(S, "_spread", lambda df, key: df)
+    monkeypatch.setattr(session, "spread", lambda df, *keys: df)
     unspread = _rows(
         S.topk_neighbors(emb, queries, k=5), ["qid", "id", "score"]
     )
@@ -45,6 +46,7 @@ def test_spread_preserves_topk_neighbors(spark, embeddings, monkeypatch):
 
 def test_spread_preserves_lsh_and_sq(spark, embeddings, monkeypatch):
     import c99_vectordb_spark.operators.similarity as S
+    from c99_vectordb_spark import session
 
     emb = embeddings.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
@@ -61,7 +63,7 @@ def test_spread_preserves_lsh_and_sq(spark, embeddings, monkeypatch):
         S.sq_topk_batch(embeddings, queries, k=5, qvec_col="qvec"),
         ["qid", "id", "qdist"],
     )
-    monkeypatch.setattr(S, "_spread", lambda df, key: df)
+    monkeypatch.setattr(session, "spread", lambda df, *keys: df)
     b_lsh = _rows(
         S.lsh_bucketed_neighbors(emb, queries, dim=dim, k=5),
         ["qid", "id", "score"],
@@ -75,17 +77,19 @@ def test_spread_preserves_lsh_and_sq(spark, embeddings, monkeypatch):
 
 
 def test_spread_is_explicit_count_not_coalescible(spark, embeddings):
-    """The corpus side must carry REPARTITION_BY_NUM (explicit count):
+    """A spread must carry REPARTITION_BY_NUM (explicit count):
     AQE may coalesce REPARTITION_BY_COL, silently re-serializing the
-    compute-dense scoring stages the spread exists to widen."""
-    import c99_vectordb_spark.operators.similarity as S
+    compute-dense stages the spread exists to widen."""
+    from c99_vectordb_spark import session
 
     emb = embeddings.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
-    spread = S._spread(emb, "id")
+    spread = session.spread(emb, "id")
     n = spark.sparkContext.defaultParallelism
     assert spread.rdd.getNumPartitions() == n
+    with pytest.raises(ValueError):
+        session.spread(emb)
     # an explicit-count repartition plans its Exchange with the
     # REPARTITION_BY_NUM shuffle origin (stable public marker since
     # Spark 3.2 — AQE never coalesces that origin), while the keyed
@@ -123,3 +127,38 @@ def test_minhash_spread_preserves_pairs(spark, documents):
         ["id_a", "id_b"],
     )
     assert got == want
+
+
+# registry queries that reach a spread site and have no other
+# spread == unspread test
+SPREAD_QUERIES = [
+    "dedup_winnowing",
+    "dedup_cdc_chunks",
+    "sim_recall_report",
+    "dedup_semdedup_pairs",
+    "orders_bootstrap_ci",
+    "dedup_cosine_pairs",
+    "sim_range_search",
+    "multimodal_jpeg_pixel",
+    "multimodal_png_roundtrip",
+    "sim_ivfpq",
+]
+
+
+@pytest.mark.parametrize("name", SPREAD_QUERIES)
+def test_registry_query_spread_is_identity(spark, sf_dir, monkeypatch, name):
+    """The rows of each query are the same with every spread patched
+    to the identity, and the query does reach a spread."""
+    from c99_vectordb_spark import session
+    from c99_vectordb_spark.queries_registry import queries
+
+    q = queries()[name]
+    df = q(spark, sf_dir)
+    spread = sorted(map(tuple, df.collect()))
+    calls = []
+    monkeypatch.setattr(
+        session, "spread", lambda df, *keys: calls.append(keys) or df
+    )
+    unspread = sorted(map(tuple, q(spark, sf_dir).collect()))
+    assert calls, f"{name} reaches no spread site"
+    assert spread == unspread
